@@ -1,10 +1,12 @@
 package graft.api
 
 import graft.functions.Tags
+import graft.model.Canon
 import graft.operators.{TimeSeries => TS}
 import graft.sources.JsonIngest
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import scala.jdk.CollectionConverters._
 
 /** The reference's query surface IS its URL path (SURVEY.md: "the query
   * plan is the URL path"). This interpreter maps a nibbledb route string to
@@ -54,8 +56,8 @@ object Router {
     * health probe, `{"status":"ok"}` as a one-row frame. Pure — reaching
     * the route IS the health signal, as in the reference.
     */
-  def health(df: DataFrame): DataFrame = {
-    import df.sparkSession.implicits._
+  def health(spark: SparkSession): DataFrame = {
+    import spark.implicits._
     Seq("ok").toDF("status")
   }
 
@@ -74,7 +76,8 @@ object Router {
         .agg(coalesce(sum(col), lit(0L)).as("length"))
     parts match {
       case "ts" :: rest if rest.nonEmpty => run(store, rest.mkString("/"))
-      case "ctl" :: "ts" :: "sync" :: Nil => store.sync(); health(store.snapshot)
+      case "ctl" :: "ts" :: "sync" :: Nil => store.sync(); health(store.session)
+      case "info" :: "status" :: Nil => health(store.session)
       case ids :: "last" :: n :: Nil => store.readLast(ids.split(',').toSeq, n.toInt)
       case ids :: "latest" :: Nil => store.readLast(ids.split(',').toSeq, 1)
       case ids :: "memory" :: "length" :: Nil => tierLength("mem_len", ids)
@@ -86,14 +89,19 @@ object Router {
   /** POST `ts/<id>` (reference `src/main.re:60-74`): the body is ONE
     * point object or an ARRAY of them ([[graft.sources.JsonIngest]]'s
     * 4-shape grammar per element; the array branch mirrors the
-    * reference's `A(lis)` iteration through `explodeBatches`). Good
+    * reference's `A(lis)` iteration through `explodeIndexed`). Good
     * elements buffer into the tiered store exactly like the streaming
     * path — per-series spill at `spillThreshold` (the reference's
-    * `--shard-size` discipline); invalid elements are the 400 path,
-    * returned as a count so the caller can surface them. The returned
-    * one-row frame `(ingested, quarantined)` is the reference's "ok"
-    * reply, as data — completing the router's method triangle
-    * (GET [[run]], DELETE [[runDelete]], POST here).
+    * `--shard-size` discipline) — in element order, the body's arrival
+    * order; invalid elements are the 400 path, returned as a count so the
+    * caller can surface them. The returned one-row frame
+    * `(ingested, quarantined)` is the reference's "ok" reply, as data —
+    * completing the router's method triangle (GET [[run]], DELETE
+    * [[runDelete]], POST here).
+    *
+    * The body is parsed by ONE Spark job: its collected rows give both
+    * counts, and the good ones reach the store as a local frame, whose
+    * collect runs no further job.
     */
   def runPost(store: graft.sources.TieredStore, route: String, body: String,
               ingestTimeUs: Long = 0L, spillThreshold: Long = 20000L): DataFrame = {
@@ -104,21 +112,16 @@ object Router {
       case i :: Nil if i.nonEmpty => i
       case _ => throw new UnknownRouteException(route)
     }
-    val session = store.snapshot.sparkSession
+    val session = store.session
     import session.implicits._
-    // cache the exploded wire for the request's lifetime: ingest, the
-    // good count and the bad count all read it — uncached, the per-
-    // element JSONPath explode + parse would run three times
-    val wire = JsonIngest.explodeBatches(Seq((id, body)).toDF("series", "json"))
-      .cache()
-    try {
-      val r = JsonIngest.ingest(wire, ingestTimeUs)
-      val good = r.good.withColumn(TieredStore.SEQ, col("rid"))
-      store.ingest(good, TieredStore.SEQ, spillThreshold)
-      // counts AFTER the ingest moved the rows; the returned frame is a
-      // local literal, so releasing the wire cache cannot invalidate it
-      Seq((r.good.count(), r.bad.count())).toDF("ingested", "quarantined")
-    } finally wire.unpersist(blocking = false)
+    val parsed = JsonIngest.parse(
+        JsonIngest.explodeIndexed(Seq((id, body)).toDF("series", "json")), ingestTimeUs)
+      .select(Canon.schema.fieldNames.toSeq.map(col) ++
+        Seq(col(JsonIngest.POS).as(TieredStore.SEQ), col(JsonIngest.VALID)): _*)
+    val (good, bad) = parsed.collect().partition(_.getAs[Boolean](JsonIngest.VALID))
+    store.ingest(session.createDataFrame(good.toSeq.asJava, parsed.schema),
+      TieredStore.SEQ, spillThreshold)
+    Seq((good.length.toLong, bad.length.toLong)).toDF("ingested", "quarantined")
   }
 
   def run(df: DataFrame, route: String): DataFrame = {
@@ -128,10 +131,10 @@ object Router {
       case "names" :: Nil => TS.names(df)
       case "info" :: "ts" :: "names" :: Nil => TS.names(df)
       case "info" :: "ts" :: "stats" :: Nil => TS.stats(df)
-      case "info" :: "status" :: Nil => health(df)
+      case "info" :: "status" :: Nil => health(df.sparkSession)
       // sync against a flat frame: nothing is buffered, ack like the
       // reference's empty-membuf flush (`src/timeseries.re:166-168`)
-      case "ctl" :: "ts" :: "sync" :: Nil => health(df)
+      case "ctl" :: "ts" :: "sync" :: Nil => health(df.sparkSession)
       case ids :: rest =>
         val series = ids.split(',').toSeq
         rest match {

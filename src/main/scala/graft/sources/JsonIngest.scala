@@ -88,14 +88,31 @@ object JsonIngest {
     shapeOk && valueOk && tsOk && tagOk
   }
 
+  /** Element-position column [[explodeIndexed]] adds: the element's index
+    * in its array body, 0 for a single-object body. */
+  val POS = "__pos"
+
+  /** Validity column [[parse]] adds: the row passed [[isValidShape]]. */
+  val VALID = "__valid"
+
   /** S2: a wire payload may be ONE object or an ARRAY of objects — the
     * reference's batch POST (`src/main.re:60-67` dispatches `` `O`` vs
     * `` `A`` and validates each element). Splits array payloads into
-    * per-element rows; the element text is re-serialized by
-    * `get_json_object` (Jackson copies tokens in document order, so the
-    * key-ORDER-sensitive shape check still sees the wire order).
-    * Single-object (and unparseable) payloads pass through verbatim; an
-    * empty array contributes nothing.
+    * per-element rows `(series, json)`; see [[explodeIndexed]].
+    */
+  def explodeBatches(wire: DataFrame): DataFrame = explodeIndexed(wire).drop(POS)
+
+  /** [[explodeBatches]] plus each element's position ([[POS]]). The array
+    * is split in ONE parse of the body: `from_json` as `array<string>`
+    * hands each element back as its raw text — Jackson copies a
+    * non-string token's structure in document order, so the
+    * key-ORDER-sensitive shape check still sees the wire order, a string
+    * element is its unquoted value and a null element the text `null` —
+    * byte-identical to the per-index `get_json_object(json, '$[i]')` this
+    * replaces (pinned by `IngestShapesSpec`), so the content-derived rid
+    * is unchanged, and an n-element body costs O(n), not O(n²).
+    * Single-object (and unparseable) payloads pass through verbatim at
+    * position 0; an empty array contributes nothing.
     *
     * Divergence note: the reference iterates a batch sequentially and
     * ABORTS at the first invalid element — elements before it are already
@@ -104,15 +121,16 @@ object JsonIngest {
     * good elements land, bad ones quarantine — same accepted grammar,
     * saner batch semantics.
     */
-  def explodeBatches(wire: DataFrame): DataFrame = {
+  def explodeIndexed(wire: DataFrame): DataFrame = {
     val nArr = json_array_length(col("json"))
-    val singles = wire.filter(nArr.isNull).select("series", "json")
-    val elems = wire.filter(nArr.isNotNull && nArr > 0)
-      .select(col("series"), col("json"),
-        explode(sequence(lit(0), nArr - 1)).as("__i"))
-      // dynamic JSONPath: per-element raw text, wire key order preserved
+    val singles = wire.filter(nArr.isNull)
+      .select(col("series"), col("json"), lit(0).as(POS))
+    val elems = wire.filter(nArr.isNotNull)
       .select(col("series"),
-        expr("get_json_object(json, concat('$[', __i, ']'))").as("json"))
+        posexplode(from_json(col("json"), ArrayType(StringType))).as(Seq(POS, "json")))
+      // a JSON null element is the only one `from_json` hands back as SQL
+      // NULL; the per-index path gave its text
+      .select(col("series"), coalesce(col("json"), lit("null")).as("json"), col(POS))
     singles.unionByName(elems)
   }
 
@@ -126,13 +144,30 @@ object JsonIngest {
     *                     wall clock per point, `src/timeseries.re:37-44`)
     */
   def ingest(wire: DataFrame, ingestTimeUs: Long): Result = {
-    val valid = isValidShape(col("json"))
-    val parsed = from_json(col("json"), wireSchema).as("p")
-    val good = wire.filter(valid)
-      .select(col("series"), col("json"), parsed)
-      .select(
+    val good = parse(wire, ingestTimeUs).filter(col(VALID))
+      .select(Canon.schema.fieldNames.toSeq.map(col): _*)
+    val bad = wire.filter(!coalesce(isValidShape(col("json")), lit(false)))
+    Result(good, bad)
+  }
+
+  /** Every wire row parsed in one pass: the wire's columns other than
+    * `json`, the canonical datapoint columns (meaningful only on valid
+    * rows) and [[VALID]]. [[ingest]] splits it into its two sides; a
+    * caller that needs both sides of one request collects it once.
+    */
+  def parse(wire: DataFrame, ingestTimeUs: Long): DataFrame = {
+    val carried = wire.columns.toSeq.filterNot(Set("series", "json")).map(col)
+    wire.select(carried ++ Seq(col("series"), col("json"),
+        coalesce(isValidShape(col("json")), lit(false)).as(VALID),
+        from_json(col("json"), wireSchema).as("p")): _*)
+      .select(carried ++ Seq(
         col("series"),
-        coalesce(col("p.timestamp").cast(LongType), lit(ingestTimeUs)).as(Canon.TS_US),
+        // cast only valid rows: an invalid one may carry a double no Long
+        // holds (`"NaN"` coerced by from_json, an out-of-order 1e30),
+        // whose ANSI cast would fail the whole batch instead of
+        // quarantining that row
+        coalesce(when(col(VALID), col("p.timestamp").cast(LongType)), lit(ingestTimeUs))
+          .as(Canon.TS_US),
         // array of single-key objects → ordered (name,value) structs;
         // a multi-key object contributes its first entry, like the
         // reference's head-of-assoc-list parse.
@@ -141,19 +176,20 @@ object JsonIngest {
           struct(e.getField("key").as("name"), e.getField("value").as("value"))
         }).as(Canon.TAG),
         col("p.value").as(Canon.VALUE),
-        col("json"))
+        col("json"),
+        col(VALID)): _*)
       // rid is CONTENT-DERIVED: hash of (series, payload, intra-batch seq
       // among byte-identical rows). monotonically_increasing_id() would
       // depend on the partition layout, so re-ingesting the same batch
       // yielded different rids. The seq window's order among identical
       // rows is arbitrary but the rows are identical, so the emitted row
       // SET is deterministic; rid stays a unique (ts, rid) sort tiebreak.
+      // Validity is a function of the payload, so numbering invalid rows
+      // too leaves every valid row's seq unchanged.
       .withColumn(Canon.RID, xxhash64(col("series"), col("json"),
         row_number().over(org.apache.spark.sql.expressions.Window
           .partitionBy(col("series"), col("json"))
           .orderBy(col("series")))))
       .drop("json")
-    val bad = wire.filter(!coalesce(valid, lit(false)))
-    Result(good, bad)
   }
 }

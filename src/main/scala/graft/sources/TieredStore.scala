@@ -4,11 +4,11 @@ import graft.functions.Tags
 import graft.model.Canon
 import graft.model.Canon._
 import graft.operators.{TimeSeries => TS}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.CheckpointBridge
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.LongType
+import scala.jdk.CollectionConverters._
 
 /** M1-M3 + I2: the dual-tier store — an in-memory arrival buffer layered
   * over a [[VersionedStore]] manifest-chain disk tier, replicating the
@@ -27,17 +27,20 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *    arrivals) — flush it to disk first, then read disk only
   *    (`timeseries.re:357-361`).
   *
-  * Spark-first mapping: the memory tier is an eagerly LOCAL-CHECKPOINTED
-  * DataFrame carrying an arrival-sequence column. Every buffer mutation
-  * swaps in a fresh checkpoint, which (a) materializes the new content
-  * immediately (decoupling it from non-replayable foreachBatch sources),
-  * and (b) truncates the plan to one `LogicalRDD` leaf — plan depth and
-  * block count stay CONSTANT over an unbounded micro-batch stream instead
-  * of growing one union/filter layer per batch. Qualification is ONE
-  * distributed aggregate over the buffer (a per-series lag(1) monotonicity
-  * count + min-ts vs the disk upper bound); the M2 merge is `union` + the
-  * same `WindowGroupLimit` top-n every flat read uses — Catalyst, not
-  * hand-merging.
+  * Spark-first mapping: like the reference's membuf, the memory tier lives
+  * on the driver — one FIFO per series ([[TieredStore.SeriesQueue]]) of
+  * canonical rows in arrival order, with the metadata membufq keeps up to
+  * date as it goes (`src/membufq.re:17-47`): length, min/max ts and an
+  * arrival-order `ascending` flag. An append collects its slice once and
+  * updates them, so its cost tracks the batch, not the buffer; the spill
+  * check, the tier qualification, [[bufferedCount]] and a flush's disk
+  * bounds read them and run no Spark job. A `last n` builds its memory
+  * side as a `LocalRelation` of each series' n newest points; a flush or
+  * sync writes its rows from one broadcast copy in one task; a snapshot's
+  * memory side is one broadcast copy of the whole buffer, built by the
+  * first snapshot after a change and reused until the next. The M2 merge
+  * is `union` + the same `WindowGroupLimit` top-n every flat read uses —
+  * Catalyst, not hand-merging.
   *
   * **Durability protocol (unified, r13)**: every disk-tier mutation —
   * spill, sync, direct append, delete, compaction — commits a version on
@@ -55,27 +58,32 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * (the OPTIMIZE + VACUUM pairing), which is where space is reclaimed.
   *
   * **Snapshot contract**: every frame this class returns (readLast,
-  * snapshot, lengthSplit) is built under the store lock from the
-  * checkpointed buffer plus parquet relations whose file listing Spark
-  * pins at construction — an immutable snapshot of the store at call time.
-  * Committed data dirs are immutable, so a snapshot stays valid across
-  * later mutations; only [[compactDisk]]'s history expiry removes files,
-  * after which a stale reader fails LOUDLY (file-not-found) — never a
-  * silently doubled or stale answer. Superseded buffer checkpoints are
-  * kept alive for [[TieredStore.RetireDepth]] further mutations, same
-  * contract.
+  * snapshot, lengthSplit) is built under the store lock from an immutable
+  * copy of the buffered rows it needs (a `LocalRelation` or a broadcast)
+  * plus parquet relations whose file listing Spark pins at construction —
+  * an immutable snapshot of the store at call time. No later append or
+  * flush can change or release that copy, however many follow: there is
+  * no retire depth to outlive. Committed data dirs are immutable, so a
+  * snapshot stays valid across later mutations; only [[compactDisk]]'s
+  * history expiry removes files, after which a stale reader fails LOUDLY
+  * (file-not-found) — never a silently doubled or stale answer.
   *
-  * Driver-side state is the per-series disk bounds and qualification
-  * verdicts — the metadata the reference's membuf holds
-  * (`src/membufq.re:45-47`), bounded by series cardinality and CAPPED at
-  * `maxTrackedSeries` entries: a store pointed at more series than the cap
-  * stops tracking new bounds and conservatively degrades those series'
-  * reads to the always-correct merge/flush paths (reads stay flat, memory
-  * stays bounded, answers stay right).
+  * Driver-side state beyond the buffer is the per-series disk bounds — the
+  * `disk_range` the reference's membuf caches (`src/membufq.re:45-47`),
+  * bounded by series cardinality and CAPPED at `maxTrackedSeries` entries:
+  * a store pointed at more series than the cap stops tracking new bounds
+  * and conservatively degrades those series' reads to the always-correct
+  * merge/flush paths (reads stay flat, memory stays bounded, answers stay
+  * right).
   *
-  * Scale notes (100 TB): the memory tier is an ingest BUFFER — bounded by
-  * the spill threshold (reference `--shard-size`), not by corpus size; every
-  * read-path aggregate runs over that bounded frame. The disk tier is the
+  * Scale notes (100 TB): the memory tier is an ingest BUFFER on the driver
+  * heap — per series below the spill threshold (reference `--shard-size`)
+  * plus one batch, so in total about threshold × buffered series + one
+  * batch, never corpus size; a deployment sizes the driver (or the
+  * threshold) for that. A snapshot adds one broadcast copy of that
+  * buffer per change that a read follows (the superseded copy is freed
+  * once no frame refers to it); a `last n` copies only each series' n
+  * newest points. The disk tier is the
   * partitioned ShardStore layout under manifest versioning, whose
   * series/day pruning does the heavy lifting; plan size is bounded by the
   * number of distinct skip sets (≈ deletes since the last compact), never
@@ -123,11 +131,12 @@ final class TieredStore(spark: SparkSession, val root: String,
                         val electBucketsAt: Int = TieredStore.BucketLayoutThreshold) {
   import TieredStore._
 
-  @volatile private var mem: DataFrame = emptyMem(spark)
-  @volatile private var memEmpty = true
-  /** Superseded buffer checkpoints, oldest first; see the snapshot
-    * contract in the class doc. */
-  private val retiredFrames = scala.collection.mutable.Queue.empty[DataFrame]
+  /** The memory tier: one FIFO per buffered series, in first-arrival
+    * order. Read and written only under the store lock. */
+  private val mem = scala.collection.mutable.LinkedHashMap.empty[String, SeriesQueue]
+  /** The whole buffer as a frame, built by the first [[snapshot]] after
+    * the buffer last changed; `None` until then. */
+  private var memFrame: Option[Shared] = None
   /** Per-series (min ts, max ts) of everything flushed to disk; the analog
     * of the membuf's cached `disk_range` (`src/membufq.re:45-47`).
     */
@@ -220,24 +229,36 @@ final class TieredStore(spark: SparkSession, val root: String,
 
   /** Whole disk tier at the cached tip, canonical form. */
   private def readStore: DataFrame =
-    tip.fold(emptyCanon(spark))(c => VersionedStore.contentOf(spark, root, c))
+    tip.fold(local(Nil))(c => VersionedStore.contentOf(spark, root, c))
 
-  /** Swap the buffer to new content: eagerly local-checkpoint the plan
-    * (materialized blocks, depth-1 `LogicalRDD` plan), then retire the
-    * superseded frame. Checkpoints older than [[RetireDepth]] swaps have
-    * their blocks dropped deterministically via [[CheckpointBridge]].
-    */
-  private def swapMem(plan: DataFrame): Unit = {
-    val old = mem
-    mem = plan.localCheckpoint(eager = true)
-    // ALWAYS retire the superseded frame: a drained buffer's empty
-    // checkpoint is still a checkpoint (skipping it when memEmpty leaked
-    // one persisted-RDD registration per drain cycle); releasing the
-    // pristine initial emptyMem frame is a harmless no-op (its RDD was
-    // never persisted).
-    retiredFrames.enqueue(old)
-    while (retiredFrames.size > RetireDepth)
-      CheckpointBridge.releaseCheckpoint(retiredFrames.dequeue())
+  /** The given canonical rows as a `LocalRelation`: an immutable copy.
+    * For a few rows only: the optimizer folds and compares a
+    * `LocalRelation`'s rows on the driver, and its scan ships them inside
+    * every task — at a deep buffer that cost more than the query. */
+  private def local(rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, Canon.schema)
+
+  /** The given canonical rows as a frame read from ONE broadcast of an
+    * immutable copy: `slices` tasks each take a contiguous share of it.
+    * The plan holds only the broadcast handle, so planning cost is flat
+    * and the rows reach each executor once, not inside every task of
+    * every query. */
+  private def shared(rows: Vector[Row], slices: Int): Shared = {
+    val b = spark.sparkContext.broadcast(rows)
+    val k = math.max(1, math.min(slices, rows.size))
+    Shared(spark.createDataFrame(spark.sparkContext.parallelize(0 until k, k).flatMap { i =>
+      val all = b.value
+      all.slice(i * all.size / k, (i + 1) * all.size / k)
+    }, Canon.schema), b)
+  }
+
+  /** The buffer changed: a built [[memFrame]] no longer matches it. Its
+    * executor copies go at once; frames already handed out keep the
+    * driver's copy, which Spark's ContextCleaner frees once they are
+    * unreachable. */
+  private def bufferChanged(): Unit = {
+    memFrame.foreach(_.rows.unpersist(blocking = false))
+    memFrame = None
   }
 
   /** Direct-to-disk append (the batch ingest path). An empty frame is a
@@ -248,59 +269,66 @@ final class TieredStore(spark: SparkSession, val root: String,
     if (bounds.nonEmpty) { appendStore(slice); applyBounds(bounds); maybeElect() }
   }
 
-  /** Buffer points in the memory tier. `seqCol` is the arrival order —
-    * the FIFO position in the reference's membuf (`src/membufq.re:9`).
+  /** Buffer points in the memory tier: ONE collect of the slice, then each
+    * row joins its series' queue. `seqCol` orders the slice's rows among
+    * themselves — the FIFO position in the reference's membuf
+    * (`src/membufq.re:9`); across calls, arrival order is call order.
     */
-  def appendMemory(df: DataFrame, seqCol: String): Unit = this.synchronized {
-    val slice = df.select(col(SERIES), col(TS_US), col(TAG), col(VALUE),
-      col(RID), col(seqCol).cast(LongType).as(SEQ))
-    swapMem(if (memEmpty) slice else mem.unionByName(slice))
-    memEmpty = false
+  def appendMemory(df: DataFrame, seqCol: String): Unit =
+    this.synchronized { bufferRows(df, seqCol) }
+
+  /** [[appendMemory]]'s body; returns the series the slice appended to. */
+  private def bufferRows(df: DataFrame, seqCol: String): Set[String] = {
+    val rows = df.select(col(SERIES), col(TS_US), col(TAG), col(VALUE), col(RID),
+        col(seqCol).cast(LongType))
+      .collect()
+      .sortBy(_.getLong(5)) // stable: equal positions keep collect order
+    if (rows.nonEmpty) bufferChanged()
+    rows.map { r =>
+      mem.getOrElseUpdate(r.getString(0), new SeriesQueue)
+        .add(Row(r.get(0), r.get(1), r.get(2), r.get(3), r.get(4)))
+      r.getString(0)
+    }.toSet
   }
 
   /** M3 / S6: flush the named series' buffered points to the disk tier. */
   def flush(ids: Seq[String]): Unit = this.synchronized { flushLocked(ids) }
 
   /** S6 `ctl/ts/sync` (reference `src/main.re:188`, `timeseries_sync` →
-    * `Timeseries.flush`): flush EVERY buffered series to disk. Idempotent —
-    * a second sync on an empty buffer is a no-op.
-    *
-    * Flush-all is its OWN path, not `flush(allIds)`: collecting every
-    * buffered series name to the driver and planning two `isin(<N
-    * literals>)` filters is exactly the Catalyst plan-size pathology the
-    * many-series probe exists to rule out (1M series → a
-    * hundreds-of-MB expression tree pinning the driver). The whole
-    * buffer moves as one unfiltered write; the bounds update reuses the
-    * same aggregate that gates the (empty → no-commit) case.
+    * `Timeseries.flush`): flush EVERY buffered series to disk in one
+    * commit. Idempotent — a second sync on an empty buffer is a no-op.
     */
-  def sync(): Unit = this.synchronized {
-    if (!memEmpty) {
-      val moving = canonSel(mem)
-      val bounds = collectBounds(moving)
-      if (bounds.nonEmpty) { appendStore(moving); applyBounds(bounds); maybeElect() }
-      swapMem(emptyMem(spark))
-      memEmpty = true
+  def sync(): Unit = this.synchronized { flushLocked(mem.keys.toSeq) }
+
+  /** Moves the named series' queues to the disk tier as one commit. Their
+    * disk bounds come from the queues' counters; a queue leaves the buffer
+    * only once its rows are committed. The rows are written by ONE task:
+    * each task writes its own file into every (series, day) directory it
+    * touches, so more slices would multiply the files later scans open
+    * until a compaction. */
+  private def flushLocked(ids: Seq[String]): Unit = {
+    val moving = ids.distinct.flatMap(s => mem.get(s).map(s -> _))
+    if (moving.nonEmpty) {
+      val out = shared(moving.flatMap(_._2.rows).toVector, slices = 1)
+      appendStore(out.frame)
+      out.rows.destroy() // nothing else reads this copy
+      moving.foreach(m => mem.remove(m._1))
+      bufferChanged()
+      applyBounds(moving.map { case (s, q) => (s, q.minTs, q.maxTs) })
+      maybeElect()
     }
   }
 
-  private def flushLocked(ids: Seq[String]): Unit = if (!memEmpty) {
-    val moving = canonSel(mem.filter(col(SERIES).isin(ids: _*)))
-    val bounds = collectBounds(moving)
-    if (bounds.nonEmpty) { appendStore(moving); applyBounds(bounds); maybeElect() }
-    swapMem(mem.filter(!col(SERIES).isin(ids: _*)))
-    if (mem.isEmpty) { swapMem(emptyMem(spark)); memEmpty = true }
-  }
+  /** Per-series (min, max) ts of a disk-bound slice — bounded by series
+    * cardinality, capped at maxTrackedSeries by [[applyBounds]]. Computed
+    * BEFORE the disk commit so an all-empty slice commits nothing. */
+  private def collectBounds(slice: DataFrame): Seq[(String, Long, Long)] =
+    slice.groupBy(SERIES).agg(min(TS_US), max(TS_US)).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
 
-  /** Per-series (min, max) ts of a slice — bounded by series cardinality,
-    * capped at maxTrackedSeries by [[applyBounds]]. Computed BEFORE the
-    * disk commit so an all-empty slice commits nothing. */
-  private def collectBounds(slice: DataFrame): Array[org.apache.spark.sql.Row] =
-    slice.groupBy(SERIES).agg(min(TS_US).as("lo"), max(TS_US).as("hi")).collect()
-
-  private def applyBounds(rows: Array[org.apache.spark.sql.Row]): Unit = {
-    if (rows.nonEmpty) diskNonEmpty = true
-    rows.foreach { r =>
-      val (s, lo, hi) = (r.getString(0), r.getLong(1), r.getLong(2))
+  private def applyBounds(bounds: Seq[(String, Long, Long)]): Unit = {
+    if (bounds.nonEmpty) diskNonEmpty = true
+    bounds.foreach { case (s, lo, hi) =>
       if (diskBounds.contains(s) || diskBounds.size < maxTrackedSeries)
         diskBounds.updateWith(s) {
           case Some((l, h)) => Some((math.min(l, lo), math.max(h, hi)))
@@ -318,7 +346,7 @@ final class TieredStore(spark: SparkSession, val root: String,
     * drops them. */
   private def prunedCanon(c: VersionedStore.Commit,
                           prune: DataFrame => DataFrame): DataFrame =
-    if (c.dirs.isEmpty) emptyCanon(spark)
+    if (c.dirs.isEmpty) local(Nil)
     else VersionedStore.rawGroups(spark, root, c)
       .map(r => canonSel(prune(r))).reduce(_ unionByName _)
 
@@ -331,30 +359,8 @@ final class TieredStore(spark: SparkSession, val root: String,
             .filter(col(SERIES).isin(ids: _*))
         case None => raw => raw.filter(col(SERIES).isin(ids: _*))
       })
-      case _ => emptyCanon(spark)
+      case _ => local(Nil)
     }
-
-  private def memCanon(ids: Seq[String]): DataFrame =
-    canonSel(TS.selectSeries(mem, ids))
-
-  private case class MemStat(count: Long, minTs: Long, sorted: Boolean)
-
-  /** One aggregate over the (bounded) buffer: per-series count, min ts and
-    * arrival-order monotonicity — the distributed `is_ascending`
-    * (`src/membufq.re:17-28`).
-    */
-  private def memStats(ids: Seq[String]): Map[String, MemStat] = {
-    if (memEmpty) return Map.empty
-    val w = Window.partitionBy(SERIES).orderBy(col(SEQ))
-    TS.selectSeries(mem, ids)
-      .withColumn("__prev_ts", lag(col(TS_US), 1).over(w))
-      .groupBy(SERIES)
-      .agg(count(lit(1)).as("cnt"), min(TS_US).as("min_ts"),
-        sum(when(col("__prev_ts") > col(TS_US), 1L).otherwise(0L)).as("viol"))
-      .collect() // bounded by the queried series count
-      .map(r => r.getString(0) -> MemStat(r.getLong(1), r.getLong(2), r.getLong(3) == 0L))
-      .toMap
-  }
 
   /** Buffer lies STRICTLY beyond everything on disk for this series. A tie
     * (buffer min ts == disk max ts) must NOT qualify: under (ts desc,
@@ -362,9 +368,9 @@ final class TieredStore(spark: SparkSession, val root: String,
     * one, so ties take the always-correct merge/flush paths. A series with
     * cap-evicted (unknown) bounds is conservatively not-beyond.
     */
-  private def beyondDisk(s: String, st: MemStat): Boolean =
+  private def beyondDisk(s: String, q: SeriesQueue): Boolean =
     diskBounds.get(s) match {
-      case Some((_, hi)) => st.minTs > hi
+      case Some((_, hi)) => q.minTs > hi
       case None          => !boundsOverflow
     }
 
@@ -377,24 +383,35 @@ final class TieredStore(spark: SparkSession, val root: String,
     */
   def readLast(ids: Seq[String], n: Int): DataFrame = this.synchronized {
     require(ids.nonEmpty, "tiered readLast needs explicit series ids")
-    val stats = memStats(ids)
     val qualified = ids.filter(s =>
-      stats.get(s).forall(st => st.sorted && beyondDisk(s, st)))
-    val fast = qualified.filter(s => stats.get(s).exists(_.count >= n))
+      mem.get(s).forall(q => q.ascending && beyondDisk(s, q)))
+    val fast = qualified.filter(s => mem.get(s).exists(_.rows.size >= n))
     val merge = qualified.diff(fast)
     val toFlush = ids.diff(qualified)
     if (toFlush.nonEmpty) flushLocked(toFlush)
     val branches = Seq(
-      if (fast.isEmpty) None else Some(TS.readLast(memCanon(fast), fast, n)),
+      if (fast.isEmpty) None else Some(TS.readLast(newest(fast, n), fast, n)),
       if (merge.isEmpty) None
-      else {
-        val memSide = if (memEmpty) emptyCanon(spark) else memCanon(merge)
-        Some(TS.readLast(memSide.unionByName(disk(merge)), merge, n))
-      },
+      else Some(TS.readLast(newest(merge, n).unionByName(disk(merge)), merge, n)),
       if (toFlush.isEmpty) None else Some(TS.readLast(disk(toFlush), toFlush, n))
     ).flatten
     branches.reduce(_ unionByName _).orderBy(col(TS_US).desc, col(RID).desc)
   }
+
+  /** The memory side of a `last n` over QUALIFIED series: each queue's
+    * rows that can rank in its top n. A qualified queue is ascending, so
+    * they are its suffix from the n-th newest point, widened to the
+    * points tied with it (the plan's rid tie-break picks among those).
+    */
+  private def newest(ids: Seq[String], n: Int): DataFrame =
+    local(ids.distinct.flatMap(mem.get).flatMap { q =>
+      if (q.rows.size <= n) q.rows
+      else if (n <= 0) Nil
+      else {
+        val cut = q.rows(q.rows.size - n).getLong(1)
+        q.rows.drop(q.rows.lastIndexWhere(_.getLong(1) < cut) + 1)
+      }
+    })
 
   /** The session this store plans against (for router ack frames). */
   private[graft] def session: SparkSession = spark
@@ -511,29 +528,31 @@ final class TieredStore(spark: SparkSession, val root: String,
   /** The whole store as one canonical frame (memory ∪ disk) — the input
     * for every route that has no tier-aware fast path (since/range/aggs:
     * they read both tiers anyway, and Catalyst prunes the disk side).
-    * Built under the lock: the memory side is the current checkpoint, the
-    * disk side the cached tip's relations — an immutable snapshot per the
-    * class contract.
+    * Built under the lock: the memory side is a broadcast copy of the
+    * buffer, the disk side the cached tip's relations — an immutable
+    * snapshot per the class contract. The memory side is built by the
+    * first snapshot after the buffer changes and reused by every later
+    * one until the next change, so a read-mostly store copies its buffer
+    * once, not per GET.
     */
   def snapshot: DataFrame = this.synchronized {
-    val m = if (memEmpty) emptyCanon(spark) else canonSel(mem)
-    if (!diskHasData) m
-    else m.unionByName(readStore)
+    val m = if (mem.isEmpty) None else Some(memFrame.getOrElse {
+      val f = shared(mem.values.flatMap(_.rows).toVector,
+        spark.sparkContext.defaultParallelism)
+      memFrame = Some(f); f
+    }.frame)
+    (m ++ (if (diskHasData) Some(readStore) else None))
+      .reduceOption(_ unionByName _).getOrElse(local(Nil))
   }
 
-  /** Number of buffered points (the membuf length, one job over the
-    * bounded buffer). */
-  def bufferedCount(): Long = if (memEmpty) 0L else mem.count()
+  /** Number of buffered points (the membuf length, from the counters). */
+  def bufferedCount(): Long = this.synchronized(mem.values.map(_.rows.size.toLong).sum)
 
   /** Whether any series' bounds were dropped on the cap (tests). */
   private[graft] def boundsOverflowed: Boolean = boundsOverflow
 
-  /** Buffer plan depth + tracked-bounds size, for lifecycle tests. */
-  private[graft] def lifecycleStats: (Int, Int) =
-    (memPlanDepth(mem.queryExecution.analyzed), diskBounds.size)
-
-  private def memPlanDepth(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int =
-    1 + (if (p.children.isEmpty) 0 else p.children.map(memPlanDepth).max)
+  /** Number of series with tracked disk bounds, for lifecycle tests. */
+  private[graft] def trackedBounds: Int = diskBounds.size
 
   /** S3 ingest-side spill policy (reference `--shard-size`,
     * `src/main.re:10`; spill at `timeseries.re:158-168`): buffer the
@@ -544,11 +563,9 @@ final class TieredStore(spark: SparkSession, val root: String,
     */
   def ingest(batch: DataFrame, seqCol: String, spillThreshold: Long): Unit =
     this.synchronized {
-      appendMemory(batch, seqCol)
-      val full = mem.groupBy(SERIES).agg(count(lit(1)).as("n"))
-        .filter(col("n") >= spillThreshold)
-        .collect().map(_.getString(0)) // bounded: buffer size / threshold
-      if (full.nonEmpty) flushLocked(full.toSeq)
+      // only a series this batch appended to can have reached the threshold
+      val full = bufferRows(batch, seqCol).toSeq.filter(mem(_).rows.size >= spillThreshold)
+      if (full.nonEmpty) flushLocked(full)
     }
 
   /** I2: per-series memory/disk length split
@@ -557,8 +574,9 @@ final class TieredStore(spark: SparkSession, val root: String,
     * Snapshot semantics as [[snapshot]].
     */
   def lengthSplit(ids: Seq[String]): DataFrame = this.synchronized {
-    val m = (if (memEmpty) emptyCanon(spark) else memCanon(ids))
-      .groupBy(SERIES).agg(count(lit(1)).as("mem_len"))
+    import spark.implicits._
+    val m = ids.distinct.flatMap(s => mem.get(s).map(q => (s, q.rows.size.toLong)))
+      .toDF(SERIES, "mem_len")
     val d = disk(ids).groupBy(SERIES).agg(count(lit(1)).as("disk_len"))
     // full-outer of two series-cardinality aggregates — never a data join
     m.join(d, Seq(SERIES), "full_outer")
@@ -571,14 +589,32 @@ final class TieredStore(spark: SparkSession, val root: String,
 }
 
 object TieredStore {
-  /** Arrival-sequence column of the memory tier (membuf FIFO position). */
+  /** Arrival-order column of a batch handed to [[TieredStore.ingest]] or
+    * `appendMemory`: orders the batch's rows among themselves (membuf
+    * FIFO position). */
   val SEQ = "__seq"
 
-  /** How many superseded buffer checkpoints stay alive after a mutation:
-    * a returned frame remains a valid immutable snapshot for at least this
-    * many subsequent mutations, then fails loudly if still unevaluated.
-    */
-  val RetireDepth = 8
+  /** A frame over one broadcast copy of canonical rows, and that copy. */
+  private final case class Shared(frame: DataFrame, rows: Broadcast[Vector[Row]])
+
+  /** One series' buffered points in arrival order, with the metadata the
+    * reference's membufq keeps as it goes (`src/membufq.re:17-47`). */
+  private final class SeriesQueue {
+    val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
+    var minTs: Long = Long.MaxValue
+    var maxTs: Long = Long.MinValue
+    /** No point arrived with a ts below its predecessor's: the arrival-order
+      * `is_ascending` (`src/membufq.re:17-28`). */
+    var ascending = true
+
+    def add(r: Row): Unit = {
+      val ts = r.getLong(1)
+      if (rows.nonEmpty && ts < rows.last.getLong(1)) ascending = false
+      minTs = math.min(minTs, ts)
+      maxTs = math.max(maxTs, ts)
+      rows += r
+    }
+  }
 
   /** Rough series-cardinality point where the flat `series=/day=` layout's
     * per-series directory creation starts to dominate write cost
@@ -601,11 +637,4 @@ object TieredStore {
     * threshold still prunes well. */
   val ElectedBuckets = 64
 
-  private def emptyCanon(spark: SparkSession): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      Canon.schema)
-
-  private def emptyMem(spark: SparkSession): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Canon.schema.fields :+ StructField(SEQ, LongType)))
 }

@@ -53,9 +53,13 @@ object Ingest {
     * MEMORY BUFFER → per-series spill at `spillThreshold` points (the
     * `--shard-size` membuf discipline, reference `src/timeseries.re:158-168`)
     * — hot-tail reads against the store take the TieredStore fast paths
-    * between spills. Arrival sequence within a batch is the content-derived
-    * rid (stable across replays, so a checkpoint-recovered batch re-buffers
-    * identically); batches arrive in batchId order under the streaming
+    * between spills. Each batch's good rows are collected once into the
+    * store's driver-side queues, so a batch must fit the driver heap.
+    * Arrival sequence within a batch is the content-derived rid: the lines
+    * of one micro-batch have no arrival order of their own (their row
+    * order follows how the file source splits the batch), while rid is
+    * stable across replays, so a checkpoint-recovered batch re-buffers
+    * identically. Batches arrive in batchId order under the streaming
     * engine's serial foreachBatch contract.
     */
   def startTieredFileStream(spark: SparkSession, inDir: String,

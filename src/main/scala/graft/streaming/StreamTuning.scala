@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Scale-adaptive partitioning for the STREAMING queries (guide §2:
@@ -18,13 +19,16 @@ import org.apache.spark.sql.SparkSession
   * input.
   *
   * The derivation is volume-proportional — `ceil(inputBytes / target)`,
-  * at least 1 — so it is 1-2 partitions at bench scale and thousands at
-  * 100 TB: nothing here reads the core count, and a bigger corpus gets
-  * MORE state partitions under the identical rule. `target` defaults to
-  * 32 MiB of input per state partition (state for these queries is an
-  * aggregation over the input, orders of magnitude smaller than the
-  * input itself) and is configurable per deployment via
-  * `spark.graft.stream.bytesPerStatePartition`.
+  * at least 1 — so it is 1-2 partitions at bench scale: nothing here
+  * reads the core count, and a bigger corpus gets MORE state partitions
+  * under the identical rule. `target` defaults to 32 MiB of input per
+  * state partition (state for these queries is an aggregation over the
+  * input, orders of magnitude smaller than the input itself) and is
+  * configurable per deployment via
+  * `spark.graft.stream.bytesPerStatePartition`. At the default, 100 TB of
+  * input derives 3,276,800 state partitions, far more than a state store
+  * should carry; a corpus-scale deployment raises the target (e.g. 32 GiB
+  * gives 3,200).
   */
 object StreamTuning {
 
@@ -41,11 +45,17 @@ object StreamTuning {
   }
 
   /** Total size of the regular files directly under `dir` — the staged
-    * stream input directories are flat (no nested parquet dirs).
+    * stream input directories are flat (no nested parquet dirs). Listed
+    * through the Hadoop `FileSystem` of the dir's URI with the session's
+    * Hadoop conf, so HDFS/S3/ABFS inputs size the same as local ones; a
+    * missing dir is 0 bytes.
     */
-  def inputBytes(dir: String): Long =
-    Option(new java.io.File(dir).listFiles())
-      .map(_.filter(_.isFile).map(_.length).sum).getOrElse(0L)
+  def inputBytes(spark: SparkSession, dir: String): Long = {
+    val path = new Path(dir)
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(path)) 0L
+    else fs.listStatus(path).filter(_.isFile).map(_.getLen).sum
+  }
 
   /** A session for running ONE stream whose shuffle (= state store and
     * sink) partition count is derived from `inDir`'s volume. A fresh
@@ -57,7 +67,7 @@ object StreamTuning {
   def sessionFor(s: SparkSession, inDir: String): SparkSession = {
     val target = s.conf.getOption(TargetConf).map(_.toLong)
       .getOrElse(DefaultTargetBytes)
-    val parts = statePartitions(inputBytes(inDir), target)
+    val parts = statePartitions(inputBytes(s, inDir), target)
     val ss = s.newSession()
     graft.Graft.register(ss) // session-scoped functions + excluded rules
     ss.conf.set("spark.sql.shuffle.partitions", parts.toString)

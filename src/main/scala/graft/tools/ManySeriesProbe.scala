@@ -62,7 +62,7 @@ object ManySeriesProbe {
       val cnt = st.readLast(ids, 50).count()
       val wall = (System.nanoTime() - t0) / 1e9
       println(f"[mseries] series=$n%8d read_wall=$wall%6.2fs rows=$cnt " +
-        s"tracked_bounds=${st.lifecycleStats._2}")
+        s"tracked_bounds=${st.trackedBounds}")
       val want = 4 * math.min(rows / n, 50L) // per-series rows shrink as n grows
       if (cnt != want) { println(s"[mseries] FAIL: expected $want rows, got $cnt"); failed = true }
       // sync() — the r8 flush-all path plans NO per-series isin (the old
@@ -81,7 +81,7 @@ object ManySeriesProbe {
         val split = st.lengthSplit(Seq("s0")).select("disk_len")
           .collect()(0).getLong(0)
         println(f"[mseries] series=$n%8d sync_wall=$syncWall%6.1fs " +
-          s"(s0 disk_len=$split, bounds=${st.lifecycleStats._2} capped at ${st.maxTrackedSeries})")
+          s"(s0 disk_len=$split, bounds=${st.trackedBounds} capped at ${st.maxTrackedSeries})")
         if (split != rows / n) { println(s"[mseries] FAIL: sync lost rows"); failed = true }
       }
       wall
@@ -210,8 +210,8 @@ object ManySeriesProbe {
     val t1 = System.nanoTime()
     capped.appendDisk(diskRows)
     println(f"[mseries] 5k-series disk append wall=${(System.nanoTime() - t1) / 1e9}%.1fs " +
-      s"tracked_bounds=${capped.lifecycleStats._2} (cap 1000)")
-    if (capped.lifecycleStats._2 > 1000) {
+      s"tracked_bounds=${capped.trackedBounds} (cap 1000)")
+    if (capped.trackedBounds > 1000) {
       println("[mseries] FAIL: bounds map exceeded the cap"); failed = true
     }
     // an untracked series (id >= 1000 was cap-evicted) must still read right

@@ -7,18 +7,18 @@ import org.apache.spark.sql.streaming.Trigger
 
 /** Long-session soak of the STREAMING tiered-ingest path (r7 VERDICT
   * item 8): a production `startTieredFileStream` runs for weeks, so the
-  * per-micro-batch buffer lifecycle — eager localCheckpoint swap,
-  * bounded retire queue, per-series spill — must hold *beyond* the few
-  * batches the unit specs drive. This probe feeds `waves` waves of wire
-  * JSON through a real file stream (each wave = ≥1 micro-batch via
-  * `processAllAvailable`), with the spill threshold sized so every few
-  * waves cycle buffer→disk, and asserts after EVERY wave:
+  * per-micro-batch buffer lifecycle — driver-side per-series queues,
+  * per-series spill — must hold *beyond* the few batches the unit specs
+  * drive. This probe feeds `waves` waves of wire JSON through a real file
+  * stream (each wave = ≥1 micro-batch via `processAllAvailable`), with
+  * the spill threshold sized so every few waves cycle buffer→disk, and
+  * asserts after EVERY wave:
   *
-  *  - **plan depth flat**: the buffer's analyzed plan stays the depth-1
-  *    `LogicalRDD` the checkpoint swap promises (no per-batch union
-  *    lineage growth);
-  *  - **block count bounded**: live cached RDDs ≤ RetireDepth + live
-  *    frames (the retire queue drains; no checkpoint leak);
+  *  - **buffer bounded**: after a batch's spill check every series holds
+  *    fewer points than the threshold;
+  *  - **no cached blocks**: live cached RDDs stay at the stream's own
+  *    transient few (the buffer lives on the driver heap, not in Spark
+  *    blocks);
   *  - **tracked bounds bounded** by true series cardinality;
   *  - **reads stay right**: every 10 waves, `readLast` over all series
   *    must return exactly n·series rows and `lengthSplit`'s total must
@@ -35,6 +35,9 @@ import org.apache.spark.sql.streaming.Trigger
   * Run: `sbt "runMain graft.tools.TieredIngestSoak 150"` (~3-4 min).
   */
 object TieredIngestSoak {
+  /** Cached RDDs a file stream may hold transiently between batches. */
+  private val StreamCachedRdds = 4
+
   def main(args: Array[String]): Unit = {
     val waves = args.headOption.map(_.toInt).getOrElse(150)
     val spark = GraftSession.builder("local[8]", 8).getOrCreate()
@@ -47,16 +50,16 @@ object TieredIngestSoak {
     val store = new TieredStore(spark, storeDir)
 
     val series = (0 until 5).map(i => s"s$i")
+    val threshold = 130L
     val pointsPerWave = 200 // 40/series/wave; threshold 130 → spill ~ every 4 waves
     val q = Ingest.startTieredFileStream(spark, inDir, store, ckpt,
-      spillThreshold = 130L, Trigger.ProcessingTime("50 milliseconds"),
+      spillThreshold = threshold, Trigger.ProcessingTime("50 milliseconds"),
       maxFilesPerTrigger = Some(1))
 
     def liveCachedRdds(): Int = spark.sparkContext.getRDDStorageInfo.length
 
     var fed = 0L
     var deletedTotal = 0L
-    var baselineDepth = -1
     var failed = false
     def fail(msg: String): Unit = { println(s"[soak] FAIL $msg"); failed = true }
 
@@ -73,16 +76,15 @@ object TieredIngestSoak {
       fed += pointsPerWave
       q.processAllAvailable()
 
-      val (depth, bounds) = store.lifecycleStats
-      if (baselineDepth < 0) baselineDepth = depth
-      if (depth != baselineDepth)
-        fail(s"wave $wave: plan depth $depth != baseline $baselineDepth (lineage growth)")
+      val buffered = store.bufferedCount()
+      if (buffered >= series.size * threshold)
+        fail(s"wave $wave: $buffered buffered points, threshold $threshold x ${series.size} series")
+      val bounds = store.trackedBounds
       if (bounds > series.size)
         fail(s"wave $wave: tracked bounds $bounds > ${series.size} series")
       val rdds = liveCachedRdds()
-      // one live buffer + RetireDepth retired + transient stream-internal
-      if (rdds > TieredStore.RetireDepth + 4)
-        fail(s"wave $wave: $rdds cached RDDs (checkpoint leak)")
+      if (rdds > StreamCachedRdds)
+        fail(s"wave $wave: $rdds cached RDDs (block leak)")
 
       // live mutations against the actively-ingesting store: a DELETE of
       // the disjoint past window [fed-2000, fed-1001] (offsets mod 5 == 0
@@ -110,7 +112,7 @@ object TieredIngestSoak {
         if (total != fed - deletedTotal)
           fail(s"wave $wave: lengthSplit total $total != ${fed - deletedTotal}")
         val heap = (Runtime.getRuntime.totalMemory() - Runtime.getRuntime.freeMemory()) >> 20
-        println(f"[soak] wave ${wave + 1}%4d fed=$fed%8d depth=$depth rdds=$rdds " +
+        println(f"[soak] wave ${wave + 1}%4d fed=$fed%8d buffered=$buffered rdds=$rdds " +
           f"bounds=$bounds heapMB=$heap wall=${(System.nanoTime() - t0) / 1e9}%7.1fs")
       }
       wave += 1
@@ -124,7 +126,7 @@ object TieredIngestSoak {
       fail(s"post-sync snapshot $diskTotal != ${fed - deletedTotal} " +
         s"(fed $fed - deleted $deletedTotal)")
     val finalRdds = liveCachedRdds()
-    if (finalRdds > TieredStore.RetireDepth + 4) fail(s"final cached RDDs $finalRdds")
+    if (finalRdds > StreamCachedRdds) fail(s"final cached RDDs $finalRdds")
     println(f"[soak] done: $wave waves, $fed points, final rdds=$finalRdds, " +
       f"wall=${(System.nanoTime() - t0) / 1e9}%.1fs " +
       (if (failed) "RESULT: FAIL" else "RESULT: OK"))

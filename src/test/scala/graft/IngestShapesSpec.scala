@@ -32,6 +32,57 @@ class IngestShapesSpec extends SparkSuite {
       ("g", """not json at all""")))
   }
 
+  /** The per-index JSONPath explode `explodeBatches` used before its
+    * one-pass form — the reference for each element's text, which rid
+    * hashes. */
+  private def perIndexExplode(wire: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.functions._
+    val nArr = json_array_length(col("json"))
+    val singles = wire.filter(nArr.isNull).select(col("series"), col("json"), lit(0).as("pos"))
+    val elems = wire.filter(nArr.isNotNull && nArr > 0)
+      .select(col("series"), col("json"), explode(sequence(lit(0), nArr - 1)).as("pos"))
+      .select(col("series"),
+        expr("get_json_object(json, concat('$[', pos, ']'))").as("json"), col("pos"))
+    singles.unionByName(elems)
+  }
+
+  test("one-pass explode yields the per-index explode's element texts byte for byte") {
+    // every body JsonIngestSpec and the wire fixture ingest, alone and as
+    // array elements, plus string, number, null, nested and malformed ones
+    val objects = Seq(
+      """{"value": 1}""", """{"tag": [{"a":"b"}], "value": 2}""",
+      """{"timestamp": 10, "value": 3}""", """{"timestamp": 11, "tag": [{"a":"b"}], "value": 4}""",
+      """{"value": 5, "timestamp": 12}""", """{"timestamp": 13, "value": 6, "tag": []}""",
+      """{"value": "x"}""", """{"value": "NaN"}""", """{"value": "42"}""",
+      """{"tag": [{"a":"b"}]}""", """{}""", """{"Value": 7}""", """{"timestamp": "t", "value": 8}""",
+      """{"timestamp": 1000000.9, "value": 2}""",
+      """{"tag": [{"loc":"1"},{"loc":"2"},{"sci":"x"}], "value": 1}""",
+      """{"timestamp": 1439856000000000, "tag": [{"location":"1"},{"scientist":"langstroth"}], "value": 12.0}""",
+      """{ "value" :  1.50 , "timestamp":1e3 }""", """{"value": -0.0}""",
+      """{"value": 12345678901234567890}""", "{\"tag\": [{\"k\":\"\\u00e9 \\\"q\\\" é\"}], \"value\": 1}",
+      """{"nested": {"x": [1, {"y": null}]}, "value": 1}""", """{"value": true}""")
+    val fixture = spark.read.schema("series STRING, json STRING")
+      .json(SparkEntry.wireFixturePath).as[(String, String)].collect().toSeq
+    val elements = objects ++ Seq(
+      "\"str\"", "\"with \\\"escapes\\\" \\u00e9\"", "42", "-7.25", "1E+2",
+      "null", "true", "[1, [2, {\"a\": null}]]", "[]", "{}")
+    val bodies = fixture ++ objects.map("o" -> _) ++
+      objects.map(o => "a" -> s"[$o]") ++
+      fixture.map { case (_, j) => "f" -> s"[$j]" } ++
+      Seq("all" -> elements.mkString("[", ",", "]"),
+        "m" -> """[{"value": 1}, {"value":""", // malformed arrays pass through whole
+        "m" -> "[1, 2,]", "m" -> "[", "m" -> "not json at all", "m" -> "",
+        "m" -> "[1, 2] trailing", "m" -> """[{"value": 1}] {}""", "m" -> "[null, null]")
+    val wire = bodies.toDF("series", "json")
+    def texts(df: org.apache.spark.sql.DataFrame) =
+      df.select("series", "pos", "json").as[(String, Int, Option[String])].collect().sorted.toSeq
+    val want = texts(perIndexExplode(wire))
+    val got = texts(JsonIngest.explodeIndexed(wire).withColumnRenamed(JsonIngest.POS, "pos"))
+    assert(want.size > 100, s"too few elements compared: ${want.size}")
+    assert(got == want, got.diff(want).take(5).mkString("\n") + "\nvs\n" +
+      want.diff(got).take(5).mkString("\n"))
+  }
+
   test("tag grammar enforced at ingest: non-array / null / empty-object tags quarantine") {
     val wire = Seq(
       ("s", """{"tag": "notalist", "value": 1}"""),

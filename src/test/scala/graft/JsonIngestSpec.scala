@@ -31,10 +31,14 @@ class JsonIngestSpec extends SparkSuite {
       "s" -> """{"tag": [{"a":"b"}]}""",                    // no value
       "s" -> """{}""",                                      // empty
       "s" -> """{"Value": 7}""",                            // case-sensitive
-      "s" -> """{"timestamp": "t", "value": 8}"""           // non-numeric ts
+      "s" -> """{"timestamp": "t", "value": 8}""",          // non-numeric ts
+      // invalid rows whose parsed ts no Long holds: quarantined, not a
+      // failed cast
+      "s" -> """{"timestamp": "NaN", "value": 1}""",        // string ts → NaN
+      "s" -> """{"value": 1, "timestamp": 1e30}"""          // wrong order, huge ts
     ), T0)
     assert(r.good.count() == 4)
-    assert(r.bad.count() == 9)
+    assert(r.bad.count() == 11)
     assert(r.good.select("value").as[Double].collect().toSet == Set(1.0, 2.0, 3.0, 4.0))
   }
 

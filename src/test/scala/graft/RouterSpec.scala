@@ -126,6 +126,20 @@ class RouterSpec extends SparkSuite {
     intercept[IllegalArgumentException] { Router.runPost(st, "ts/a/b/c", "{}") }
   }
 
+  test("POST array body: elements whose ts no Long holds quarantine beside good ones") {
+    import graft.sources.TieredStore
+    val st = new TieredStore(spark, tmpDir("router_post_bad_ts"))
+    val r = Router.runPost(st, "ts/s1",
+      """[{"timestamp": 5, "value": 1},
+        | {"timestamp": "NaN", "value": 2},
+        | {"value": 3, "timestamp": 1e30},
+        | {"timestamp": 6, "value": 4}]""".stripMargin)
+      .as[(Long, Long)].head()
+    assert(r == ((2L, 2L)))
+    assert(Router.run(st, "ts/s1/last/10").select("ts_us", "value").as[(Long, Double)]
+      .collect().toSeq == Seq((6L, 4.0), (5L, 1.0)))
+  }
+
   test("DELETE against a live store: buffer flush, shard rewrite, reads see it") {
     import graft.sources.TieredStore
     import org.apache.spark.sql.functions.col

@@ -30,8 +30,17 @@ class StreamTuningSpec extends SparkSuite {
     java.nio.file.Files.write(java.nio.file.Paths.get(d, "b.parquet"),
       Array.fill[Byte](23)(1))
     java.nio.file.Files.createDirectory(java.nio.file.Paths.get(d, "sub"))
-    assert(StreamTuning.inputBytes(d) == 123L)
-    assert(StreamTuning.inputBytes(d + "/does-not-exist") == 0L)
+    assert(StreamTuning.inputBytes(spark, d) == 123L)
+    assert(StreamTuning.inputBytes(spark, d + "/does-not-exist") == 0L)
+  }
+
+  test("inputBytes lists through the Hadoop FileSystem: a file: URI sizes like its path") {
+    val d = tmpDir("stream_tuning_uri_")
+    java.nio.file.Files.write(java.nio.file.Paths.get(d, "a.json"), Array.fill[Byte](77)(1))
+    val uri = new java.io.File(d).toURI.toString
+    assert(uri.startsWith("file:/"), uri)
+    assert(StreamTuning.inputBytes(spark, uri) == 77L)
+    assert(StreamTuning.inputBytes(spark, uri + "does-not-exist") == 0L)
   }
 
   test("sessionFor derives shuffle partitions from the dir and isolates the caller") {

@@ -145,7 +145,7 @@ class TieredStoreRecoverySpec extends SparkSuite {
     // right via the conservative merge path even with an overlapping
     // buffer
     val reopened = new TieredStore(spark, root, maxTrackedSeries = 0)
-    assert(reopened.lifecycleStats._2 == 0 && reopened.boundsOverflowed)
+    assert(reopened.trackedBounds == 0 && reopened.boundsOverflowed)
     reopened.appendMemory(
       Seq((dp("b", T0 + 50500L, 7777L), 0L)).toDF("d", TieredStore.SEQ)
         .select(col("d.*"), col(TieredStore.SEQ)),
@@ -158,8 +158,8 @@ class TieredStoreRecoverySpec extends SparkSuite {
     // buffers — covering the tracked and the conservative untracked
     // path regardless of which series drew which
     val mixed = new TieredStore(spark, root, maxTrackedSeries = 1)
-    assert(mixed.lifecycleStats._2 == 1 && mixed.boundsOverflowed,
-      s"mixed hydration state: ${mixed.lifecycleStats}")
+    assert(mixed.trackedBounds == 1 && mixed.boundsOverflowed,
+      s"mixed hydration state: ${mixed.trackedBounds} bounds")
     mixed.appendMemory(
       Seq((dp("a", T0 + 50500L, 8888L), 0L), (dp("b", T0 + 50500L, 9999L), 1L))
         .toDF("d", TieredStore.SEQ)

@@ -139,29 +139,32 @@ class TieredStoreSpec extends SparkSuite {
     val st = freshSorted() // 100 on disk, 20 buffered
     val snap = st.snapshot
     val split = st.lengthSplit(Seq("a"))
-    st.flush(Seq("a")) // moves the 20 buffered rows to disk
-    // evaluated AFTER the flush, the pre-flush snapshot must not double-count
+    // an append after a snapshot: the next snapshot sees it, the earlier not
+    st.appendMemory(arriving(Seq(dp("a", T0 + 999000L, 999L))), TieredStore.SEQ)
+    val snap2 = st.snapshot
+    st.flush(Seq("a")) // moves the 21 buffered rows to disk
+    // evaluated AFTER the flush, the pre-flush snapshots must not double-count
     assert(snap.count() == 120L)
+    assert(snap2.count() == 121L)
     val r = split.head()
     assert(r.getLong(1) == 20L && r.getLong(2) == 100L)
     // while a fresh read sees the post-flush state
     val r2 = st.lengthSplit(Seq("a")).head()
-    assert(r2.getLong(1) == 0L && r2.getLong(2) == 120L)
+    assert(r2.getLong(1) == 0L && r2.getLong(2) == 121L)
+    assert(st.snapshot.count() == 121L)
   }
 
-  test("buffer plan depth and checkpoint block count stay bounded over many batches") {
+  test("the buffer holds no Spark blocks over many batches") {
     val before = spark.sparkContext.getPersistentRDDs.size
     val st = new TieredStore(spark, tmpDir("tier"))
     (0L until 25L).foreach { i =>
       st.ingest(arriving(Seq(dp("a", T0 + i * 1000L, i))), TieredStore.SEQ,
         spillThreshold = 7L)
     }
-    val (depth, _) = st.lifecycleStats
-    assert(depth <= 3, s"buffer lineage grew with batch count: depth $depth")
     val after = spark.sparkContext.getPersistentRDDs.size
-    assert(after - before <= TieredStore.RetireDepth + 2,
-      s"superseded buffer checkpoints accumulate: $before -> $after")
-    // nothing lost across 25 swaps + spills
+    assert(after <= before, s"the memory tier persisted RDDs: $before -> $after")
+    assert(st.bufferedCount() == 4L) // 25 = 3 spills of 7 + 4 buffered
+    // nothing lost across 25 appends + spills
     assert(st.readLast(Seq("a"), 25).count() == 25L)
   }
 
@@ -170,7 +173,7 @@ class TieredStoreSpec extends SparkSuite {
     val many = (0 until 10).flatMap(s =>
       (0L until 5L).map(i => dp(f"s$s%02d", T0 + i * 1000L, s * 100L + i)))
     st.appendDisk(many.toDF())
-    assert(st.lifecycleStats._2 == 4) // map capped, not grown
+    assert(st.trackedBounds == 4) // map capped, not grown
     // s09 is untracked; a beyond-bound buffer must NOT shortcut to M1
     st.appendMemory(
       arriving((5L until 8L).map(i => dp("s09", T0 + i * 1000L, 900L + i))),
